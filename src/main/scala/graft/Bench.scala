@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. A short untimed warmup first
@@ -9,13 +8,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // local iteration only (driver never sets it): comma-separated name
-    // prefixes to time just a subset, and an optional repeat count to
-    // separate real cost from run-to-run variance
-    val only: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    // local iteration only: a repeat count to separate real cost from
+    // run-to-run variance (SPARK_GRAFT_ONLY, read by Harness, times just a
+    // subset)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
     // Bench-private scratch dir for Materialize.toStorage outputs: a
     // query's scratch is never re-read after the query completes, so the
     // fence sweeps it below — three passes over the catalog otherwise
@@ -27,20 +23,7 @@ object Bench {
     // Verify/ScaleProbe JVM keeps its own scratch untouched.
     val benchScratch =
       sys.props("java.io.tmpdir") + s"/graft-bench-scratch-${java.util.UUID.randomUUID()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.scratchDir", benchScratch)
-      // 262 queries × several codegen units each ≫ the default 100-entry
-      // janino class cache — at the default, EVERY pass recompiles every
-      // generated class (measured: pass totals 661/563/388 s — the
-      // third pass is the only one that ever ran warm). A catalog-sized
-      // cache makes passes 2-3 read pass 1's compiled classes, which is
-      // what a resident production service does too.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCpus, Some(benchScratch))
     def sweepScratch(): Unit = {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
@@ -53,35 +36,29 @@ object Bench {
     // were crowding the JSON line out of the captured tail (rounds 2-4).
     spark.sparkContext.setLogLevel("ERROR")
 
-    // noop write forces evaluation of EVERY output column — a bare
-    // count() would let Catalyst skip projection work entirely and
-    // under-time the scan-heavy queries.
-    //
-    // GC fence (untimed) before each query: without it, a heavy
+    // Fence (untimed) before each query. GC: without it, a heavy
     // predecessor's broadcast/shuffle debris gets collected INSIDE the
     // next query's timing — observed inflating sub-second queries to
-    // 10+ s late in the run. Also drop predecessors' persisted RDDs
-    // (partEdges, sketched, q49's successor table): ContextCleaner
-    // reclaims them lazily, and 148 queries' worth of pinned blocks
-    // squeeze storage memory enough to triple late-run timings (g01
-    // measured 5.3 s isolated vs 23.5 s late in a full pass before
-    // this). The sweep is SAFE because every materialized frame keeps
-    // its lineage (graft.Materialize persists, never localCheckpoints):
-    // a swept block recomputes on next use. No operator may memoize a
-    // lineage-truncated frame across invocations.
-    def timedPass(tag: Int): Map[String, Double] =
-      SparkEntry.queries.filter(kv => selected(kv._1)).map { case (name, fn) =>
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    // 10+ s late in the run. clearCache(): drops predecessors' persisted
+    // frames (partEdges, sketched, q49's successor table) — 148 queries'
+    // worth of pinned blocks squeeze storage memory enough to triple
+    // late-run timings (g01 measured 5.3 s isolated vs 23.5 s late in a
+    // full pass before any fence). It must be the CacheManager's clear,
+    // not an unpersist of the persisted RDDs: that left each entry
+    // registered at StorageLevel NONE, so the next Materialize(df) of the
+    // same plan found it, skipped its persist and every consumer
+    // recomputed the frame (p01 warm passes 10.5/11.6 s under the RDD
+    // sweep vs 5.1/4.8 s under clearCache). Clearing is SAFE because
+    // every materialized frame keeps its lineage (graft.Materialize
+    // persists, never localCheckpoints): the next use recomputes. No
+    // operator may memoize a lineage-truncated frame across invocations.
+    def timedPass(): Map[String, Either[Throwable, Double]] =
+      Harness.names.map { name =>
+        spark.catalog.clearCache()
         sweepScratch()
         System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        // -1 marks a failed query — a swallow-and-time would make a
-        // crash look like a fast run.
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
+        name -> Harness.run(spark, sfDir, name)(Harness.noop)
+      }.toMap
 
     // Three full executions per query; reported time = the MIN of the
     // three. Pass 1 doubles as warmup (JIT + whole-stage-codegen +
@@ -93,30 +70,33 @@ object Bench {
     // noise band the dominant uncertainty in round-over-round
     // comparison — a third pass halves the odds a spike survives into
     // the min). All executions are complete plans over the full input —
-    // nothing is cached between passes (the fence unpersists
-    // everything), so the min is a real end-to-end time, not a
-    // warm-cache artifact. A query that failed in any pass reports -1.
+    // nothing is cached between passes (the fence clears the cache), so
+    // the min is a real end-to-end time, not a warm-cache artifact. A
+    // query that failed in any pass reports -1 (a swallow-and-time would
+    // make a crash look like a fast run) and its first exception lands
+    // in bench_detail.json's "errors".
     // raw per-pass times ride along into bench_detail.json so the min is
     // auditable (which pass won, how far apart they were)
     val Passes = 3
-    var passDetail: Map[String, Seq[Double]] = Map.empty
-    val results: Seq[(String, Double)] =
+    // row name -> its timed runs: one row per query over all passes, or
+    // (reps mode) one row per query and rep
+    val rows: Seq[(String, Seq[Either[Throwable, Double]])] =
       if (reps > 1) {
         // local iteration mode: per-rep times, no min-folding — the
         // point there is to SEE the variance (one untimed warmup first)
-        SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (_, fn) =>
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-        (1 to reps).flatMap(r => timedPass(r).map { case (n, t) => s"$n#$r" -> t })
+        Harness.names.foreach(Harness.run(spark, sfDir, _)(Harness.noop))
+        (1 to reps).flatMap(r => timedPass().toSeq.map { case (n, t) => s"$n#$r" -> Seq(t) })
       } else {
-        val ps = (1 to Passes).map(timedPass)
-        passDetail = ps.head.keys.map(n => n -> ps.map(_(n))).toMap
-        SparkEntry.queries.keys.filter(selected).toSeq.sorted.map { n =>
-          val ts = ps.map(_(n))
-          n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
-        }
+        val ps = (1 to Passes).map(_ => timedPass())
+        Harness.names.sorted.map(n => n -> ps.map(_(n)))
       }
+    val times = rows.map { case (n, ts) => n -> ts.map(_.getOrElse(-1.0)) }
+    val results: Seq[(String, Double)] = times.map { case (n, ts) =>
+      n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
+    }
+    val passDetail: Map[String, Seq[Double]] = if (reps > 1) Map.empty else times.toMap
+    val errors: Seq[(String, Throwable)] =
+      rows.flatMap { case (n, ts) => ts.collectFirst { case Left(e) => n -> e } }
     // The driver captures only the LAST ~2000 chars of the run log, so the
     // whole printed JSON line must fit in that window (minus sbt's
     // ~90-char [success] trailer). The per-query map does NOT fit: at 261
@@ -168,9 +148,15 @@ object Bench {
     // iteration run must not silently replace it (the verify_summary
     // clobber lesson, applied to the bench record).
     val detailName =
-      if (only.isEmpty && reps == 1) "bench_detail.json" else "bench_detail_subset.json"
+      if (Harness.only.isEmpty && reps == 1) "bench_detail.json" else "bench_detail_subset.json"
+    // failed rows only: name -> "Class: message" of its first failure
+    val errorsJson =
+      if (errors.isEmpty) ""
+      else errors.map { case (n, e) =>
+        s"${Harness.jsonString(n)}:${Harness.jsonString(Harness.describe(e))}"
+      }.mkString(""","errors":{""", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get(detailName),
-      s"""{"metric":"total","value":${fmt(total, 3)},"median_total":${fmt(medTotal, 3)},"unit":"sec","queries":$fullQs$medQs$passes$overJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":${fmt(total, 3)},"median_total":${fmt(medTotal, 3)},"unit":"sec","queries":$fullQs$medQs$passes$overJson$errorsJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
     // stop() BEFORE the metric println: spark shutdown (and log4j's exit
     // flush of anything it buffered) must not print after the one JSON
     // line the driver scrapes from the captured tail. Rounds 2–5 recorded

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Eagerly materialize a derived frame that several downstream consumers
@@ -24,9 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * free, spill when it isn't.
   *
   * The frame stays persisted until the caller unpersists it (or the
-  * session ends). Bench unpersists every cached RDD between queries; that
-  * blanket sweep is SAFE against these frames precisely because the
-  * lineage survives — a swept block is recomputed, never a job killer.
+  * session ends). Bench clears the cache (`spark.catalog.clearCache()`)
+  * between queries; that is SAFE against these frames precisely because
+  * the lineage survives — a cleared frame is recomputed, never a job
+  * killer.
   */
 object Materialize {
   def apply(df: DataFrame,
@@ -84,6 +85,21 @@ object Materialize {
     }
   }
 
+  /** The one scratch-path allocator: `<base>/<tag>_<uuid>`, where base is
+    * the session conf `baseConf` or else `<java.io.tmpdir>/<defaultDir>`;
+    * `write` fills the path, and a local path is then registered with the
+    * shutdown hook.
+    */
+  private def allocate(spark: SparkSession, baseConf: String, defaultDir: String, tag: String)
+                      (write: String => Unit): String = {
+    val base = spark.conf.getOption(baseConf)
+      .getOrElse(sys.props("java.io.tmpdir") + "/" + defaultDir)
+    val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
+    write(path)
+    if (isLocalPath(path)) localScratch.add(path)
+    path
+  }
+
   def toStorage(df: DataFrame, tag: String): DataFrame =
     df.sparkSession.read.parquet(toStoragePath(df, tag))
 
@@ -98,13 +114,13 @@ object Materialize {
     * cost at sf0.1 — the round-11 bench-median regression in one line).
     *
     * Scratch-parquet, NOT cache, deliberately: Bench's inter-query fence
-    * unpersists every cached RDD and sweeps the per-run scratch dir, and
-    * the fixture must survive both to amortize anything. Fixtures live
-    * under their own base (`spark.graft.fixtureDir`, default a shared
-    * tmpdir path — every stored path carries a UUID, so concurrent JVMs
-    * never collide), are registered with the same shutdown-hook cleanup
-    * as toStoragePath, and keep no lineage to invalidate: a fixture read
-    * is a flat columnar scan forever. On a real cluster the conf points
+    * clears the cache and sweeps the per-run scratch dir, and the fixture
+    * must survive both to amortize anything. Fixtures live under their
+    * own base (`spark.graft.fixtureDir`, default a shared tmpdir path —
+    * every stored path carries a UUID, so concurrent JVMs never collide),
+    * come from the same allocator as toStoragePath, with the same
+    * shutdown-hook cleanup, and keep no lineage to invalidate: a fixture
+    * read is a flat columnar scan forever. On a real cluster the conf points
     * at job scratch space (HDFS/S3) and the stored table doubles as the
     * executor-loss-safe form (the toStorage contract).
     *
@@ -133,18 +149,15 @@ object Materialize {
     */
   private val fixtureMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def fixture(s: org.apache.spark.sql.SparkSession, key: String)
+  def fixture(s: SparkSession, key: String)
              (build: => DataFrame): DataFrame = {
     val memoized = fixtureMemo.get(key)
     val path =
       if (memoized != null) memoized
       else {
-        val base = s.conf.getOption("spark.graft.fixtureDir")
-          .getOrElse(sys.props("java.io.tmpdir") + "/graft-fixtures")
         val tag = key.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '-')
-        val built = s"$base/${tag}_${java.util.UUID.randomUUID()}"
-        build.write.parquet(built)
-        if (isLocalPath(built)) localScratch.add(built)
+        val built = allocate(s, "spark.graft.fixtureDir", "graft-fixtures", tag)(
+          build.write.parquet(_))
         val raced = fixtureMemo.putIfAbsent(key, built)
         if (raced != null) raced else built
       }
@@ -173,7 +186,7 @@ object Materialize {
     * setting) with static planning. State crosses sessions through
     * scratch parquet paths, which the loops already use for carry.
     */
-  def loopSession(owner: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
+  def loopSession(owner: SparkSession): SparkSession = {
     val s = owner.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s
@@ -185,15 +198,9 @@ object Materialize {
     * session and re-reads the path on another. Registered for shutdown
     * cleanup exactly like toStorage.
     */
-  def toStoragePath(df: DataFrame, tag: String): String = {
-    val spark = df.sparkSession
-    val base = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-    val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
-    df.write.parquet(path)
-    if (isLocalPath(path)) localScratch.add(path)
-    path
-  }
+  def toStoragePath(df: DataFrame, tag: String): String =
+    allocate(df.sparkSession, "spark.graft.scratchDir", "graft-scratch", tag)(
+      df.write.parquet(_))
 
   /** toStoragePath with a Hive-style directory layout on `partCol`: each
     * distinct partCol value becomes its own directory, so a later read
@@ -205,13 +212,7 @@ object Materialize {
     * ∝ the slice, not the table. Cleanup contract identical to
     * toStoragePath.
     */
-  def toStoragePathPartitioned(df: DataFrame, tag: String, partCol: String): String = {
-    val spark = df.sparkSession
-    val base = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-    val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
-    df.write.partitionBy(partCol).parquet(path)
-    if (isLocalPath(path)) localScratch.add(path)
-    path
-  }
+  def toStoragePathPartitioned(df: DataFrame, tag: String, partCol: String): String =
+    allocate(df.sparkSession, "spark.graft.scratchDir", "graft-scratch", tag)(
+      df.write.partitionBy(partCol).parquet(_))
 }

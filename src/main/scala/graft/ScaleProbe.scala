@@ -148,13 +148,7 @@ object ScaleProbe {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     require(!tables("embeddings") || factor <= 64,
       s"factor must be in [1, 64] when the embeddings table is built, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     /** The streaming readers pick their table out of a shared directory by
@@ -491,8 +485,7 @@ object ScaleProbe {
       // everything index-row-linear, nothing re-pairs old×old)
       "d22_signature_maintenance")
       // local iteration only: probe just a subset by name prefix
-      .filter(n => sys.env.get("SPARK_GRAFT_ONLY")
-        .forall(_.split(",").exists(n.startsWith)))
+      .filter(Harness.selected)
     // warm pass (JIT + codegen + parquet footers), then the timed pass
     for (pass <- Seq("warm", "timed"); name <- probes) {
       System.gc() // Bench's GC fence: keep predecessors' debris out of the timing
@@ -503,12 +496,11 @@ object ScaleProbe {
         if (name.endsWith("@gated")) s"$outDir/gated"
         else if (name.startsWith("s")) s"$outDir/stream"
         else outDir
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(qName)(spark, qDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => println(s"[probe] $name FAILED: ${e.getMessage}"); false }
-      if (pass == "timed" && ok)
-        println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s at ${factor}x")
+      Harness.run(spark, qDir, qName)(Harness.noop) match {
+        case Left(e) => println(s"[probe] $name FAILED: ${e.getMessage}")
+        case Right(t) if pass == "timed" => println(f"[probe] $name: $t%.2f s at ${factor}x")
+        case Right(_) => ()
+      }
     }
     spark.stop()
   }

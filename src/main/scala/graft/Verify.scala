@@ -1,26 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/check.py).
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir>"
+  *
+  * `SPARK_GRAFT_ONLY` (local iteration only) dumps a name-prefix subset.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg (local iteration only — the driver passes 2):
-    // comma-separated name prefixes; run just the matching queries
-    val only: Option[Seq[String]] = args.lift(2).map(_.split(",").toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog-sized codegen class cache (see Bench) — the 261-query
-      // dump recompiles nothing it already compiled
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query wall budget (the Bench discipline, round 12): the
@@ -29,15 +19,13 @@ object Verify {
     // grown catalog — so any query whose dump exceeds the budget is
     // flagged loudly here, in the round it regresses.
     val BudgetSec = 10.0
-    var timings = List.empty[(String, Double)]
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        timings ::= (name, (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val timings = Harness.names.flatMap { name =>
+      Harness.run(spark, sfDir, name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")) match {
+        case Right(t) => Some(name -> t)
+        case Left(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          None
       }
     }
     val over = timings.filter(_._2 > BudgetSec).sortBy(-_._2)
@@ -46,20 +34,9 @@ object Verify {
         over.map { case (n, t) => f"$n=$t%.1fs" }.mkString(", "))
     System.err.println(
       f"[verify] ${timings.size} queries dumped in ${timings.map(_._2).sum}%.1f s")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

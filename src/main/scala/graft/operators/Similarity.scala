@@ -546,7 +546,20 @@ object Similarity {
     * One cheap scalar to the driver per query (a parquet-metadata
     * count), in exchange for a geometry that cannot silently go
     * quadratic when the corpus grows past the tuning point — the
-    * r7 64× saturation probe made that failure concrete.
+    * r7 64× saturation probe made that failure concrete: under the fixed
+    * 6-bit layout a 64× corpus put ~5k vectors in EVERY bucket. Bucket
+    * count is 2^bits per table, so bits must grow with log₂(N / target)
+    * for the within-bucket join to stay linear, and since round 8 the
+    * OPERATOR owns that contract instead of trusting a caller's knob.
+    *
+    * The floor (6 bits × 48 tables) is tuned for the synthetic corpora's
+    * HARD regime — near-dups at cos ≈ 0.45–0.51, where per-bit agreement
+    * is only ~0.65 — giving ~0.98 expected recall there at half the
+    * candidate volume of fewer-bits/fewer-tables settings. As derived
+    * bits grow past the floor, candidate volume stays linear by
+    * construction while recall on the hard regime decays (0.65^bits per
+    * table) — the recall knob there is TABLE count, which stays
+    * caller-visible because it trades cost, not correctness-of-scale.
     *
     * Why target 32: it is the MEASURED occupancy of the tuned floor
     * geometry (sf0.1's corpus over 2^6 buckets ≈ 31 members/bucket,
@@ -566,59 +579,6 @@ object Similarity {
     var b = LshMinBits
     while (b < LshMaxBits && (1L << b) * LshTargetBucket < n) b += 1
     b
-  }
-
-  /** LSH candidate pair generation shared by e01b/e04b (same hyperplane
-    * tables as e03): explode per-table buckets, bound each bucket to
-    * `maxBucket` members (a degenerate bucket — e.g. a corpus of identical
-    * vectors — would otherwise explode the within-bucket pair space
-    * quadratically; dropped buckets lose only pairs that the other 47
-    * tables each get another chance to emit), self-join on (table, bucket),
-    * and dedup the DIRECTED id pair. Only 8-byte ids travel through the
-    * distinct — embeddings are joined back afterwards by key, so the wide
-    * vectors never ride through the pair-dedup shuffle.
-    *
-    * Scale note: bucket count is 2^bits per table, so `bits` must grow
-    * with log2(N / targetBucketSize) for the within-bucket join to stay
-    * linear — and since round 8 the OPERATOR owns that contract:
-    * `bits < 0` (the default) derives the geometry from a corpus count
-    * via `derivedLshBits` instead of trusting the caller. The r7
-    * saturation probe is the motivation: a 64× corpus under the fixed
-    * 6-bit layout put ~5k vectors in EVERY bucket and went quadratic —
-    * a mis-set knob is a silent scale-killer, so the knob computes
-    * itself. The floor (6 bits × 48 tables) is tuned for the synthetic
-    * corpora's HARD regime — near-dups at cos ≈ 0.45–0.51, where per-bit
-    * agreement is only ~0.65 — giving ~0.98 expected recall there at half
-    * the candidate volume of fewer-bits/fewer-tables settings; a real
-    * embedding corpus (dups at cos ≥ 0.9) reaches the same recall with
-    * far more bits and fewer tables. As derived bits grow past the
-    * floor, candidate volume stays linear by construction while recall
-    * on the hard regime decays (0.65^bits per table) — the recall knob
-    * at that point is TABLE count, which stays caller-visible because
-    * it trades cost, not correctness-of-scale.
-    */
-  private def lshCandidatePairs(e: DataFrame, bits: Int = -1, tables: Int = 48,
-                                maxBucket: Long = 10000L,
-                                dedup: Boolean = true): DataFrame = {
-    val b = if (bits > 0) bits else derivedLshBits(e.count())
-    val ex = e
-      .withColumn("buckets", hyperplane_lsh_multi(col("embedding"), b, tables, 64, seed = 7L))
-      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val bounded = ex.join(
-      ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= maxBucket)
-        .select("tbl", "bucket"),
-      Seq("tbl", "bucket"))
-    val pairs = bounded.select(col("vec_id").as("vid"), col("tbl"), col("bucket"))
-      .join(bounded.select(col("vec_id").as("nid"), col("tbl"), col("bucket")),
-        Seq("tbl", "bucket"))
-      .filter(col("vid") =!= col("nid"))
-      .select("vid", "nid")
-    // dedup=false skips a full shuffle of the pair set; callers whose
-    // downstream already collapses duplicates (e04b's per-vid top-1
-    // window) pay a few re-scored cosines instead — far cheaper than
-    // shuffling the biggest intermediate in the query.
-    if (dedup) pairs.distinct() else pairs
   }
 
   /** e14 core over any (vec_id, embedding, label) frame — extracted so

@@ -7,12 +7,40 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions.cosine_similarity
 
 /** The SQL-text surface must agree exactly with the Scala DSL surface —
-  * same builders, so any divergence means a registration bug. (The
-  * `GraftExtensions` injector shares these builders verbatim; it needs a
-  * fresh SparkContext to exercise, so the runtime `register` path is what
-  * the shared-session spec drives.)
+  * same builders, so any divergence means a registration bug. Both
+  * registration paths are covered: the tests below call the runtime
+  * `register`, and the first one resolves every function on a session that
+  * only `GraftExtensions` (set by `GraftSession`) ever saw.
   */
 class GraftFunctionsSpec extends SparkSpec {
+
+  test("a fresh session resolves every function through GraftExtensions, no register call") {
+    val fresh = spark.newSession() // own function registry, built from the extensions
+    val sketch = fresh.sql("SELECT count_min_sketch(id, 0.1D, 0.9D, 3) FROM range(10)")
+      .head().getAs[Array[Byte]](0)
+    val hex = sketch.map("%02X".format(_)).mkString
+    val calls = Seq(
+      "minhash_signature" -> "size(minhash_signature(array('a b c'), 8))",
+      "simhash64" -> "simhash64(array('alpha', 'beta'))",
+      "rolling_fingerprint" -> "rolling_fingerprint('hello')",
+      "word_ngrams" -> "size(word_ngrams('a b c', 2))",
+      "word_shingles" -> "size(word_shingles('a b a b', 2))",
+      "cosine_similarity" -> "cosine_similarity(array(1.0F, 0.0F), array(1.0F, 0.0F))",
+      "hyperplane_lsh_multi" ->
+        "size(hyperplane_lsh_multi(array_repeat(CAST(0.5 AS FLOAT), 64), 6, 4, 64))",
+      "cms_min_count" -> s"cms_min_count(X'$hex', 3L)",
+      "sorted_intersect_count" -> "sorted_intersect_count(array(1L, 3L, 5L), array(3L, 5L))")
+    assert(calls.map(_._1).toSet === GraftFunctions.functions.map(_._1).toSet,
+      "every SQL-exposed function needs a call here")
+    val row = fresh.sql(calls.map { case (n, c) => s"$c AS $n" }.mkString("SELECT ", ", ", "")).head()
+    assert(row.getAs[Int]("minhash_signature") === 8)
+    assert(math.abs(row.getAs[Double]("cosine_similarity") - 1.0) < 1e-12)
+    assert(row.getAs[Int]("word_ngrams") === 2)
+    assert(row.getAs[Int]("word_shingles") === 2)
+    assert(row.getAs[Int]("hyperplane_lsh_multi") === 4)
+    assert(row.getAs[Long]("cms_min_count") >= 1L) // a CMS never underestimates
+    assert(row.getAs[Long]("sorted_intersect_count") === 2L)
+  }
 
   test("SQL-registered functions agree with the DSL expressions on real docs") {
     GraftFunctions.register(spark)
